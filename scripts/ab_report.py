@@ -3,13 +3,29 @@
 for A and B, plus MEDIAN job counts across reps (r16 ADVICE: the first
 rep's job count alone can mislead when AQE replans between reps).
 Queries present on only one side are flagged explicitly instead of
-printing nan ratios. Usage: ab_report.py <name>"""
+printing nan ratios; a capture with no record carrying a "queries" map
+(e.g. a snapshot older than that key) is flagged and skipped. Usage:
+ab_report.py <name>"""
 import json, sys, glob, statistics as st
 name = sys.argv[1]
+def record(f):
+    """The last line of `f` holding a JSON object with a "queries" map."""
+    found = None
+    for line in open(f).read().splitlines():
+        try:
+            d = json.loads(line)
+        except ValueError:
+            continue
+        if isinstance(d, dict) and isinstance(d.get("queries"), dict):
+            found = d
+    return found
 def load(side):
     out = {}
     for f in sorted(glob.glob(f"target/ab_r16/{name}_{side}[0-9].json")):
-        d = json.loads(open(f).read().splitlines()[0])
+        d = record(f)
+        if d is None:
+            print(f"WARNING: {f} holds no record with a queries map - skipped")
+            continue
         for q, v in d["queries"].items():
             out.setdefault(q, []).append((v[0], v[2]))
     return out

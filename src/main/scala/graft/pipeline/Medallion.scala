@@ -42,11 +42,19 @@ object Medallion {
 
   /** S9: register external parquet tables in the session catalog
     * (reference: spark/common/register_hive_tables.py:61-91).
+    *
+    * Over a partitioned root (as [[writePartitioned]] lays out) the
+    * catalog infers the partition columns but registers no partitions, so
+    * the table would read zero rows; recovering them from the directory
+    * layout fixes that. The recovery runs only when there are partition
+    * columns: on an unpartitioned location the statement fails.
     */
   def registerTable(spark: SparkSession, db: String, table: String, path: String): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     spark.sql(s"DROP TABLE IF EXISTS $db.$table")
     spark.sql(s"CREATE TABLE $db.$table USING PARQUET LOCATION '$path'")
+    if (spark.catalog.listColumns(db, table).collect().exists(_.isPartition))
+      spark.sql(s"ALTER TABLE $db.$table RECOVER PARTITIONS")
   }
 
   /** Fused Bronze→Gold pipeline: all four Silver tables + both Gold tables

@@ -175,6 +175,20 @@ class PipelineSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") || !plan.contains("year=2025"))
   }
 
+  test("catalog table over a partitioned root reads its rows") {
+    val dir = java.nio.file.Files.createTempDirectory("medallion").toString
+    val df = (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v")
+    val date = Medallion.PartitionDate(2026, 8, 12)
+    Medallion.writePartitioned(df, dir, "t2", date)
+    Medallion.registerTable(spark, "medallion_db", "t2", s"$dir/t2")
+    val back = spark.table("medallion_db.t2")
+    assert(back.orderBy("id").select("id").as[Long].collect().toSeq == (1L to 10L))
+    assert(back.columns.toSet == Set("id", "v", "year", "month", "day"))
+    // an unpartitioned location (the partition directory itself) registers too
+    Medallion.registerTable(spark, "medallion_db", "t2_day", s"$dir/t2/year=2026/month=8/day=12")
+    assert(spark.table("medallion_db.t2_day").count() == 10)
+  }
+
   test("fused pipeline produces both gold tables") {
     val train = mkApp(Seq(Row(1L, 1, 100000.0, 200000.0, 10000.0, validAdult, "M")))
     val test = mkApp(Seq(Row(2L, 0, 90000.0, 150000.0, 9000.0, validAdult, "F")), dropTarget = true)
